@@ -1017,7 +1017,7 @@ def mm_image_crop_pruned_probe(spark, sf_dir):
         .localCheckpoint(eager=True)
     )
     hashes = sorted({r["th"] for r in crop.select("th").collect()})  # 9 rows
-    files_all = set(t._active_files()[0])
+    files_all = set(t.snapshot().files)
     kept: set = set()
     frames = []
     for h in hashes:
@@ -1117,7 +1117,7 @@ def mm_audio_snippet_pruned_probe(spark, sf_dir):
     )
     hashes = sorted({r["fh"] for r in probe.select("fh").collect()})
 
-    inv_all = set(inv._active_files()[0])
+    inv_all = set(inv.snapshot().files)
     inv_kept: set = set()
     inv_frames = []
     for h in hashes:
@@ -1143,7 +1143,7 @@ def mm_audio_snippet_pruned_probe(spark, sf_dir):
             .collect()
         )
     )
-    fwd_all = set(fwd._active_files()[0])
+    fwd_all = set(fwd.snapshot().files)
     fwd_kept: set = set()
     fwd_frames = []
     for tid in cand:
@@ -1237,7 +1237,7 @@ def mm_video_snippet_pruned_probe(spark, sf_dir):
         .localCheckpoint(eager=True)
     )
     hashes = sorted({r["phash"] for r in probe.select("phash").collect()})
-    files_all = set(t._active_files()[0])
+    files_all = set(t.snapshot().files)
     kept: set = set()
     frames = []
     for h in hashes:

@@ -894,7 +894,7 @@ def knn_ivf_pruned_scan(spark, sf_dir):
         F.col("vec_id").alias("query_id"), "centroid_id"
     )
     probed = sorted({r["centroid_id"] for r in qp.collect()})
-    files_all = set(t._active_files()[0])
+    files_all = set(t.snapshot().files)
     kept_union: set = set()
     pruned_frames = []
     for lst in probed:
@@ -1034,7 +1034,7 @@ def knn_filtered_ivf(spark, sf_dir):
         F.col("vec_id").alias("query_id"), "centroid_id"
     )
     probed = sorted({r["centroid_id"] for r in qp.collect()})
-    files_all = set(t._active_files()[0])
+    files_all = set(t.snapshot().files)
     kept_centroid: set = set()
     kept_both: set = set()
     frames = []
@@ -1178,7 +1178,7 @@ def knn_ivfpq_pruned_store(spark, sf_dir):
     probed = sorted(
         {r["centroid_id"] for r in S.ivf_assign(qu, coarse, nprobe=2).collect()}
     )
-    files_all = set(t._active_files()[0])
+    files_all = set(t.snapshot().files)
     kept: set = set()
     frames = []
     for lst in probed:
@@ -1479,7 +1479,7 @@ def knn_filtered_ivfpq(spark, sf_dir):
     probed = sorted(
         {r["centroid_id"] for r in S.ivf_assign(qu, coarse, nprobe=2).collect()}
     )
-    files_all = set(t._active_files()[0])
+    files_all = set(t.snapshot().files)
     kept_centroid: set = set()
     kept_both: set = set()
     frames = []

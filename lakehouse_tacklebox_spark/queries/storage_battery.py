@@ -412,13 +412,13 @@ def table_optimize_compaction(spark, sf_dir):
     for m in range(1, 8):
         t.append(orders.filter(F.col("o_orderkey") % 8 == m).repartition(2))
 
-    files_before = len(t._active_files()[0])
+    files_before = len(t.snapshot().files)
     v_pre = t.version()
     n_pre = t.read().count()
 
     target = max(64, orders.count() // 4)
     t.optimize(target_file_rows=target)
-    files_after = len(t._active_files()[0])
+    files_after = len(t.snapshot().files)
     compacted = files_after < files_before
 
     # history: the pre-compaction snapshot must still serve

@@ -37,7 +37,8 @@ def clone(source: TackleTable, dest_path: str, deep: bool = False) -> TackleTabl
     dest_path = os.path.abspath(dest_path)
     if os.path.isdir(os.path.join(dest_path, _LOG_DIR)):
         raise FileExistsError(dest_path)
-    files, schema = source._active_files()
+    snap = source.snapshot()
+    files = list(snap.files)
     os.makedirs(os.path.join(dest_path, _LOG_DIR))
     os.makedirs(os.path.join(dest_path, _DATA_DIR))
 
@@ -58,10 +59,10 @@ def clone(source: TackleTable, dest_path: str, deep: bool = False) -> TackleTabl
         version=0,
         timestamp_ms=int(time.time() * 1000),
         operation="CLONE",
-        operation_parameters={"source": source.path, "deep": deep, "sourceVersion": source.version()},
+        operation_parameters={"source": source.path, "deep": deep, "sourceVersion": snap.version},
         add=add,
         remove=[],
-        schema=schema,
+        schema=snap.schema,
         metrics={"numCopiedFiles": len(add) if deep else 0, "numReferencedFiles": 0 if deep else len(add)},
         file_stats=_collect_stats(dest_path, add),
     )

@@ -62,7 +62,8 @@ def copy_into(
     """Ingest not-yet-loaded files; returns {"numSourceFiles", "numLoadedFiles",
     "numOutputRows", "version"}. No-op (no new commit) when nothing is new."""
     all_files = _list(source_dir, pattern)
-    new = [f for f in all_files if f not in loaded_files(table)]
+    loaded = loaded_files(table)
+    new = [f for f in all_files if f not in loaded]
     result = {"numSourceFiles": len(all_files), "numLoadedFiles": len(new)}
     if not new:
         result.update({"numOutputRows": 0, "version": table.version()})
@@ -77,7 +78,7 @@ def copy_into(
 
     from lakehouse_tacklebox_spark.tablestore.table import _align_schema
 
-    df = _align_schema(df, table._active_files()[1], allow_new=False)
+    df = _align_schema(df, table.snapshot().schema, allow_new=False)
     files, n = _write_files(df, table.path)
     version = table._commit(
         OPERATION,

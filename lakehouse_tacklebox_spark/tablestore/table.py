@@ -10,10 +10,17 @@ change-data-feed. Layout:
     <root>/data/<uuid>/part-*.parquet   immutable data files
     <root>/_changes/v=N/            CDF rows for commits that produce them
 
-Each log entry records added/removed file lists; the active file set at
-version V is the replay of entries 0..V. Data files are immutable —
-every operation commits by swapping file lists, exactly the Delta model,
-so readers are never torn and old versions stay readable until VACUUM.
+Each log entry records added/removed file lists; the table state at
+version V (a ``Snapshot``) is ``_fold`` of entries 0..V, the one place
+entries become state. A handle caches the parsed entries and its latest
+snapshot: each ``snapshot()`` lists ``_log/`` once and folds only the
+commits it has not seen onto it, and older versions fold from the cached
+entries. Commit files are immutable, so the cache holds while its last
+commit file is the same file (inode, mtime, size) — a path dropped and
+recreated rebuilds it. Every operation reads one snapshot, and a rewrite
+commits with that snapshot's version as its expected version. Data files
+are immutable — every operation commits by swapping file lists, exactly
+the Delta model, so old versions stay readable until VACUUM.
 
 Scale design:
 - Writes go through Spark (distributed); the log touches only file
@@ -35,9 +42,11 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import time
 import uuid
 from dataclasses import dataclass, field
+from pathlib import Path
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -113,6 +122,63 @@ class LogEntry:
         )
 
 
+@dataclass(frozen=True)
+class Snapshot:
+    """Table state at one version, shared by its readers (read-only).
+    ``files`` maps each active file, in log order, to its (column stats,
+    sketches); ``txns`` maps a txn appId to its latest committed version;
+    ``watermarks`` maps an identity column to its next free id."""
+
+    version: int
+    timestamp_ms: int
+    schema: str
+    properties: dict[str, str]
+    files: dict[str, tuple[dict, dict]]
+    txns: dict[str, int]
+    watermarks: dict[str, int]
+
+
+_EMPTY = Snapshot(-1, 0, "", {}, {}, {}, {})
+
+
+def _fold(base: Snapshot, entries: tuple[LogEntry, ...] | list[LogEntry]) -> Snapshot:
+    """Apply ``entries`` in log order on top of ``base``: removed files
+    drop out, added files go at the end, and later entries win for the
+    schema, properties, txn stamps and identity watermarks."""
+    if not entries:
+        return base
+    files, props = dict(base.files), dict(base.properties)
+    txns, marks = dict(base.txns), dict(base.watermarks)
+    schema = base.schema
+    for e in entries:
+        for f in e.remove:
+            files.pop(f, None)
+        for f in e.add:
+            files[f] = (e.file_stats.get(f, {}), e.file_sketches.get(f, {}))
+        if e.operation == "SET TBLPROPERTIES":
+            props.update(e.operation_parameters.get("properties", {}))
+        txn = e.operation_parameters.get("txn")
+        if txn:
+            txns[txn["appId"]] = int(txn["version"])
+        marks.update(e.identity_watermark)
+        schema = e.schema or schema
+    last = entries[-1]
+    return Snapshot(last.version, last.timestamp_ms, schema, props, files, txns, marks)
+
+
+def _applied(snap: Snapshot, txn: tuple[str, int] | None) -> bool:
+    """Whether ``txn=(app_id, version)`` is already committed at ``snap``."""
+    return txn is not None and snap.txns.get(txn[0], -1) >= txn[1]
+
+
+def _file_id(path: str) -> tuple[str, int, int, int] | None:
+    try:
+        st = os.stat(path)
+    except FileNotFoundError:
+        return None
+    return path, st.st_ino, st.st_mtime_ns, st.st_size
+
+
 class TackleTable:
     """Handle to a versioned parquet table rooted at ``path``."""
 
@@ -121,6 +187,10 @@ class TackleTable:
         self.path = os.path.abspath(path)
         if not os.path.isdir(self._log_path()):
             raise FileNotFoundError(f"not a TackleTable (no _log): {path}")
+        self._lock = threading.Lock()
+        self._log: tuple[LogEntry, ...] = ()
+        self._latest = _EMPTY
+        self._tail = None  # _file_id of the last cached commit file
 
     # ---------- creation ----------
 
@@ -172,25 +242,33 @@ class TackleTable:
     def _log_path(self) -> str:
         return os.path.join(self.path, _LOG_DIR)
 
-    def _entries(self) -> list[LogEntry]:
-        names = sorted(n for n in os.listdir(self._log_path()) if n.endswith(".json"))
-        return [LogEntry.from_json(open(os.path.join(self._log_path(), n)).read()) for n in names]
+    def _refresh(self) -> tuple[tuple[LogEntry, ...], Snapshot]:
+        """List ``_log/`` once, fold the commits this handle has not seen
+        onto its latest snapshot, and return (entries, latest snapshot)."""
+        log_dir = self._log_path()
+        with self._lock:
+            names = sorted(n for n in os.listdir(log_dir) if n.endswith(".json"))
+            if self._tail is not None and _file_id(self._tail[0]) != self._tail:
+                # the path was dropped and recreated: a different table
+                self._log, self._latest, self._tail = (), _EMPTY, None
+            new = [LogEntry.from_json(Path(log_dir, n).read_text()) for n in names[len(self._log) :]]
+            if new:
+                self._log += tuple(new)
+                self._latest = _fold(self._latest, new)
+                self._tail = _file_id(os.path.join(log_dir, names[-1]))
+            return self._log, self._latest
+
+    def snapshot(self, version: int | None = None) -> Snapshot:
+        """Table state at ``version`` (default: the latest commit; a
+        version past the latest reads the latest)."""
+        log, latest = self._refresh()
+        if version is None or version >= latest.version:
+            return latest
+        return _fold(_EMPTY, log[: max(version + 1, 0)])
 
     def version(self) -> int:
         """Latest committed version."""
-        return self._entries()[-1].version
-
-    def _active_files(self, version: int | None = None) -> tuple[list[str], str]:
-        """Replay the log to (active file list, schema DDL) at version."""
-        active: list[str] = []
-        schema = ""
-        for e in self._entries():
-            if version is not None and e.version > version:
-                break
-            removed = set(e.remove)
-            active = [f for f in active if f not in removed] + e.add
-            schema = e.schema or schema
-        return active, schema
+        return self.snapshot().version
 
     def set_properties(self, props: dict[str, str]) -> int:
         """ALTER TABLE ... SET TBLPROPERTIES. Properties accumulate across
@@ -202,11 +280,7 @@ class TackleTable:
         )
 
     def properties(self) -> dict[str, str]:
-        out: dict[str, str] = {}
-        for e in self._entries():
-            if e.operation == "SET TBLPROPERTIES":
-                out.update(e.operation_parameters.get("properties", {}))
-        return out
+        return dict(self.snapshot().properties)
 
     def txn_version(self, app_id: str) -> int:
         """Latest transaction version committed under ``app_id``, or -1.
@@ -217,27 +291,7 @@ class TackleTable:
         can detect, after a crash/retry, whether its write already
         committed — the stamp travels IN the data commit, so there is no
         window where data is applied but the marker is not."""
-        for e in reversed(self._entries()):
-            txn = e.operation_parameters.get("txn")
-            if txn and txn.get("appId") == app_id:
-                return int(txn["version"])
-        return -1
-
-    def _sketch_columns(self) -> list[str]:
-        raw = self.properties().get("pointlookup.columns", "")
-        return [c.strip() for c in raw.split(",") if c.strip()]
-
-    def _active_sketches(self, version: int | None = None) -> dict[str, dict]:
-        """Replay the log to {active file: {col: sketch}}."""
-        out: dict[str, dict] = {}
-        for e in self._entries():
-            if version is not None and e.version > version:
-                break
-            for f in e.remove:
-                out.pop(f, None)
-            for f in e.add:
-                out[f] = e.file_sketches.get(f, {})
-        return out
+        return self.snapshot().txns.get(app_id, -1)
 
     def identity_watermark(self, col: str) -> int:
         """Next free id for an identity column — from the persisted
@@ -245,50 +299,36 @@ class TackleTable:
         before watermarking fall back to the footer min/max stats of the
         active files (metadata already in the log); a full column read
         happens only if some active file predates stats collection."""
-        for e in reversed(self._entries()):
-            if col in e.identity_watermark:
-                return e.identity_watermark[col]
-        active, _ = self._active_files()
-        if not active:
-            return 0
-        stats = self._active_stats()
-        his = []
-        for f in active:
-            rng = stats.get(f, {}).get(col)
-            if rng is None:  # legacy file without footer stats
-                m = self.read().agg(F.max(col)).collect()[0][0]
-                return int(m) + 1 if m is not None else 0
-            his.append(rng[1])
-        return int(max(his)) + 1
+        return self._identity_watermark(self.snapshot(), col)
 
-    def _active_stats(self, version: int | None = None) -> dict[str, dict]:
-        """Replay the log to {active file: column stats}."""
-        stats: dict[str, dict] = {}
-        for e in self._entries():
-            if version is not None and e.version > version:
-                break
-            for f in e.remove:
-                stats.pop(f, None)
-            for f in e.add:
-                stats[f] = e.file_stats.get(f, {})
-        return stats
+    def _identity_watermark(self, snap: Snapshot, col: str) -> int:
+        if col in snap.watermarks:
+            return snap.watermarks[col]
+        ranges = [stats.get(col) for stats, _sketches in snap.files.values()]
+        if None in ranges:  # a legacy file without footer stats
+            m = self._read(snap).agg(F.max(col)).collect()[0][0]
+            return int(m) + 1 if m is not None else 0
+        return int(max((hi for _lo, hi in ranges), default=-1)) + 1
 
     # ---------- reads ----------
+
+    def _read(self, snap: Snapshot, files: list[str] | None = None) -> DataFrame:
+        """``files`` (default: every active file) read with the schema of ``snap``."""
+        files = list(snap.files) if files is None else files
+        if not files:
+            return self.spark.createDataFrame([], snap.schema)
+        return self.spark.read.schema(snap.schema).parquet(*[os.path.join(self.path, f) for f in files])
 
     def read(self, version: int | None = None, timestamp_ms: int | None = None) -> DataFrame:
         """Snapshot read, optionally time-traveled (VERSION/TIMESTAMP AS OF)."""
         if timestamp_ms is not None:
             if version is not None:
                 raise ValueError("pass version or timestamp_ms, not both")
-            candidates = [e.version for e in self._entries() if e.timestamp_ms <= timestamp_ms]
-            if not candidates:
+            log, _ = self._refresh()
+            version = max((e.version for e in log if e.timestamp_ms <= timestamp_ms), default=None)
+            if version is None:
                 raise ValueError(f"no version at or before timestamp {timestamp_ms}")
-            version = max(candidates)
-        files, schema = self._active_files(version)
-        if not files:
-            return self.spark.createDataFrame([], schema)
-        paths = [os.path.join(self.path, f) for f in files]
-        return self.spark.read.schema(schema).parquet(*paths)
+        return self._read(self.snapshot(version))
 
     def scan(self, condition: str | None = None, version: int | None = None) -> DataFrame:
         """Predicate scan with log-stats file skipping (Delta data
@@ -298,22 +338,17 @@ class TackleTable:
         matching keys into. The full condition is still applied as a
         DataFrame filter — pruning is a superset guarantee, correctness
         never depends on stats."""
+        snap = self.snapshot(version)
         if not condition:
-            return self.read(version)
-        kept, _skipped = self.prune_files(condition, version)
-        schema = self._active_files(version)[1]
-        if not kept:
-            return self.spark.createDataFrame([], schema).filter(F.expr(condition))
-        paths = [os.path.join(self.path, f) for f in kept]
-        return self.spark.read.schema(schema).parquet(*paths).filter(F.expr(condition))
+            return self._read(snap)
+        kept, _skipped = self.prune_files(condition, snap.version)
+        return self._read(snap, kept).filter(F.expr(condition))
 
     def prune_files(self, condition: str, version: int | None = None) -> tuple[list[str], list[str]]:
         """Split active files into (kept, skipped) for a predicate using
         the log's per-file column envelopes."""
-        files, _ = self._active_files(version)
-        stats = self._active_stats(version)
+        snap = self.snapshot(version)
         bounds = _conjunct_bounds(condition)
-        sketches = self._active_sketches(version)
         # Pre-hash each equality literal once (one tiny JVM job per
         # predicate, control-plane): the sketch check needs the same
         # xxhash64-of-string the builder used.
@@ -321,26 +356,20 @@ class TackleTable:
         for col, op, val in bounds:
             if op != "=" or isinstance(val, (float, bool)):
                 continue
-            if any(col in sk for sk in sketches.values()):
+            if any(col in sk for _stats, sk in snap.files.values()):
                 probes[col] = _probe_hashes(self.spark, val)
         kept, skipped = [], []
-        for f in files:
-            ok = _file_may_match(stats.get(f, {}), bounds)
-            if ok and probes:
-                fsk = sketches.get(f, {})
-                for col, raw in probes.items():
-                    sk = fsk.get(col)
-                    if sk is not None and not _sketch_may_contain(sk, raw):
-                        ok = False
-                        break
-            if ok:
-                kept.append(f)
-            else:
-                skipped.append(f)
+        for f, (stats, sketches) in snap.files.items():
+            ok = _file_may_match(stats, bounds) and all(
+                col not in sketches or _sketch_may_contain(sketches[col], raw)
+                for col, raw in probes.items()
+            )
+            (kept if ok else skipped).append(f)
         return kept, skipped
 
     def history(self) -> list[dict[str, Any]]:
         """DESCRIBE HISTORY equivalent, newest first."""
+        log, _ = self._refresh()
         return [
             {
                 "version": e.version,
@@ -349,19 +378,19 @@ class TackleTable:
                 "operationParameters": e.operation_parameters,
                 "operationMetrics": e.metrics,
             }
-            for e in reversed(self._entries())
+            for e in reversed(log)
         ]
 
     def detail(self) -> dict[str, Any]:
         """DESCRIBE DETAIL equivalent."""
-        files, schema = self._active_files()
-        size = sum(os.path.getsize(os.path.join(self.path, f)) for f in files)
+        snap = self.snapshot()
+        size = sum(os.path.getsize(os.path.join(self.path, f)) for f in snap.files)
         return {
             "location": self.path,
-            "numFiles": len(files),
+            "numFiles": len(snap.files),
             "sizeInBytes": size,
-            "schema": schema,
-            "version": self.version(),
+            "schema": snap.schema,
+            "version": snap.version,
         }
 
     def read_changes(self, starting_version: int, ending_version: int | None = None) -> DataFrame:
@@ -371,11 +400,11 @@ class TackleTable:
         update with CDF) produce rows; append commits contribute their
         rows as inserts.
         """
+        log, snap = self._refresh()
+        last = snap.version if ending_version is None else ending_version
         frames = []
-        for e in self._entries():
-            if e.version < starting_version:
-                continue
-            if ending_version is not None and e.version > ending_version:
+        for e in log:
+            if not starting_version <= e.version <= last:
                 continue
             cdf_dir = os.path.join(self.path, _CHANGES_DIR, f"v={e.version}")
             if os.path.isdir(cdf_dir):
@@ -388,8 +417,7 @@ class TackleTable:
                     )
                 )
         if not frames:
-            _, schema = self._active_files()
-            return self.spark.createDataFrame([], schema + ", _change_type string, _commit_version long")
+            return self.spark.createDataFrame([], snap.schema + ", _change_type string, _commit_version long")
         out = frames[0]
         for fdf in frames[1:]:
             out = out.unionByName(fdf, allowMissingColumns=True)
@@ -410,15 +438,24 @@ class TackleTable:
         identity_reserve: tuple[str, int] | None = None,
         txn: tuple[str, int] | None = None,
     ) -> int:
-        sketch_cols = self._sketch_columns() if add else []
-        file_sketches = (
-            _build_sketches(
-                self.spark, self.path, add, schema or self._active_files()[1], sketch_cols
-            )
-            if sketch_cols
-            else {}
-        )
+        """Commit one log entry; ``txn=(app_id, version)`` is stamped into
+        its operation parameters."""
+        if txn is not None:
+            params = {**params, "txn": {"appId": txn[0], "version": txn[1]}}
+        # Everything derived from the files being committed is computed
+        # once: their footers and sketches do not change between attempts.
+        base = self.snapshot()
+        raw = base.properties.get("pointlookup.columns", "")
+        sketch_cols = [c.strip() for c in raw.split(",") if c.strip()]
+        file_sketches = _build_sketches(self.spark, self.path, add, schema or base.schema, sketch_cols)
+        file_stats = _collect_stats(self.path, add)
+        id_wm: dict[str, int] = {}
+        if identity_reserve is not None:
+            col, expected_wm = identity_reserve
+            his = [int(file_stats[f][col][1]) for f in add if col in file_stats.get(f, {})]
+            id_wm[col] = max(his) + 1 if his else expected_wm
         for attempt in range(retries):
+            snap = self.snapshot()
             # Delta SetTransaction conflict rule: re-validate the idempotence
             # stamp on EVERY attempt, not only in the caller's pre-check — a
             # concurrent/zombie writer sharing the app_id (streaming failover)
@@ -426,12 +463,11 @@ class TackleTable:
             # winning log write, and blind-retrying past its FileExistsError
             # would double-apply the data. A hit means the work is already
             # durably committed: succeed as a no-op.
-            if txn is not None and self.txn_version(txn[0]) >= txn[1]:
-                return self.version()
-            current = self.version()
-            if expected_version is not None and current != expected_version:
+            if _applied(snap, txn):
+                return snap.version
+            if expected_version is not None and snap.version != expected_version:
                 raise CommitConflictError(
-                    f"table at v{current}, transaction started at v{expected_version}"
+                    f"table at v{snap.version}, transaction started at v{expected_version}"
                 )
             if identity_reserve is not None:
                 # ids in `add` were assigned from the watermark the caller
@@ -440,29 +476,19 @@ class TackleTable:
                 # concurrent commit that did NOT move the watermark is
                 # still safe to blind-retry past.
                 col, expected_wm = identity_reserve
-                live_wm = self.identity_watermark(col)
+                live_wm = self._identity_watermark(snap, col)
                 if live_wm != expected_wm:
                     raise CommitConflictError(
                         f"identity watermark for {col} moved {expected_wm} -> {live_wm}; reassign ids"
                     )
-            file_stats = _collect_stats(self.path, add)
-            id_wm: dict[str, int] = {}
-            if identity_reserve is not None:
-                col, expected_wm = identity_reserve
-                his = [
-                    int(file_stats[f][col][1])
-                    for f in add
-                    if col in file_stats.get(f, {})
-                ]
-                id_wm[col] = max(his) + 1 if his else expected_wm
             entry = LogEntry(
-                version=current + 1,
+                version=snap.version + 1,
                 timestamp_ms=int(time.time() * 1000),
                 operation=operation,
                 operation_parameters=params,
                 add=add,
                 remove=remove,
-                schema=schema or self._active_files()[1],
+                schema=schema or snap.schema,
                 metrics=metrics,
                 file_stats=file_stats,
                 identity_watermark=id_wm,
@@ -475,7 +501,7 @@ class TackleTable:
                 # another writer won this version; blind appends can
                 # retry safely, rewrites must re-resolve
                 if expected_version is not None or operation != "APPEND":
-                    raise CommitConflictError(f"lost race for v{current + 1}")
+                    raise CommitConflictError(f"lost race for v{entry.version}")
                 time.sleep(0.05 * (2**attempt))
         raise CommitConflictError("retries exhausted")
 
@@ -498,14 +524,15 @@ class TackleTable:
         an epoch): if the log already holds this app_id at >= version the
         append is a no-op, and otherwise the stamp is recorded in the
         same commit as the data (see :meth:`txn_version`)."""
-        if txn is not None and self.txn_version(txn[0]) >= txn[1]:
-            return self.version()
-        df = _align_schema(df, self._active_files()[1], allow_new=merge_schema)
+        snap = self.snapshot()
+        if _applied(snap, txn):
+            return snap.version
+        df = _align_schema(df, snap.schema, allow_new=merge_schema)
         files, n = _write_files(df, self.path)
         schema = _schema_ddl(df) if merge_schema else None
         return self._commit(
             "APPEND",
-            {"txn": {"appId": txn[0], "version": txn[1]}} if txn else {},
+            {},
             files,
             [],
             {"numOutputRows": n, "numAddedFiles": len(files)},
@@ -528,19 +555,19 @@ class TackleTable:
         and inside the ``_commit`` retry loop — and no-opped, so a
         replayed streaming fold can never re-apply on top of its own
         output."""
-        if txn is not None and self.txn_version(txn[0]) >= txn[1]:
-            return self.version()
-        old, _ = self._active_files()
+        snap = self.snapshot()
+        if _applied(snap, txn):
+            return snap.version
         files, n = _write_files(df, self.path)
         try:
             return self._commit(
                 "OVERWRITE",
-                {"txn": {"appId": txn[0], "version": txn[1]}} if txn else {},
+                {},
                 files,
-                old,
-                {"numOutputRows": n, "numAddedFiles": len(files), "numRemovedFiles": len(old)},
+                list(snap.files),
+                {"numOutputRows": n, "numAddedFiles": len(files), "numRemovedFiles": len(snap.files)},
                 schema=_schema_ddl(df),
-                expected_version=self.version(),
+                expected_version=snap.version,
                 identity_reserve=identity_reserve,
                 txn=txn,
             )
@@ -551,64 +578,52 @@ class TackleTable:
             # a version conflict — but the work is already durably committed,
             # so resolve to the idempotent no-op instead of raising. Any
             # other winner is a genuine conflict the caller re-runs.
-            if txn is not None and self.txn_version(txn[0]) >= txn[1]:
-                return self.version()
+            if _applied(latest := self.snapshot(), txn):
+                return latest.version
             raise
 
-    def delete(self, condition: str) -> int:
-        """DELETE WHERE condition — rewrites only files containing matches."""
-        start_v = self.version()
-        snap = self.read().withColumn("__file", F.input_file_name())
-        touched = [
-            _local_path(r["__file"])
-            for r in snap.filter(F.expr(condition)).select("__file").distinct().collect()
-        ]
+    def _rewrite_matching(self, operation: str, condition: str, rewrite, empty_metric: str) -> int:
+        """DELETE/UPDATE dataflow: find the files of one snapshot holding a
+        row that matches ``condition`` (one pushdown scan), rewrite only
+        those through ``rewrite``, and commit against that snapshot."""
+        snap = self.snapshot()
+        hits = self._read(snap).withColumn("__file", F.input_file_name()).filter(F.expr(condition))
+        touched = [_local_path(r["__file"]) for r in hits.select("__file").distinct().collect()]
         if not touched:
-            return self._commit("DELETE", {"predicate": condition}, [], [], {"numRemovedRows": 0})
-        kept = self.spark.read.schema(self._active_files()[1]).parquet(*touched).filter(
-            ~F.coalesce(F.expr(condition), F.lit(False))
-        )
-        files, n_kept = _write_files(kept, self.path)
+            return self._commit(
+                operation, {"predicate": condition}, [], [], {empty_metric: 0}, expected_version=snap.version
+            )
+        files, n = _write_files(rewrite(self._read(snap, touched)), self.path)
         rel_touched = [_entry_path(self.path, p) for p in touched]
         return self._commit(
-            "DELETE",
-            {"predicate": condition},
-            files,
-            rel_touched,
-            {"numRewrittenFiles": len(rel_touched), "numOutputRows": n_kept},
-            expected_version=start_v,
-        )
-
-    def update(self, condition: str, assignments: dict[str, str]) -> int:
-        """UPDATE SET col=expr WHERE condition — touched-file rewrite."""
-        start_v = self.version()
-        snap = self.read().withColumn("__file", F.input_file_name())
-        touched = [
-            _local_path(r["__file"])
-            for r in snap.filter(F.expr(condition)).select("__file").distinct().collect()
-        ]
-        if not touched:
-            return self._commit("UPDATE", {"predicate": condition}, [], [], {"numUpdatedRows": 0})
-        df = self.spark.read.schema(self._active_files()[1]).parquet(*touched)
-        cond = F.coalesce(F.expr(condition), F.lit(False))
-        updated = df.select(
-            *[
-                F.when(cond, F.expr(assignments[c])).otherwise(F.col(c)).alias(c)
-                if c in assignments
-                else F.col(c)
-                for c in df.columns
-            ]
-        )
-        files, n = _write_files(updated, self.path)
-        rel_touched = [_entry_path(self.path, p) for p in touched]
-        return self._commit(
-            "UPDATE",
+            operation,
             {"predicate": condition},
             files,
             rel_touched,
             {"numRewrittenFiles": len(rel_touched), "numOutputRows": n},
-            expected_version=start_v,
+            expected_version=snap.version,
         )
+
+    def delete(self, condition: str) -> int:
+        """DELETE WHERE condition — rewrites only files containing matches."""
+        cond = F.coalesce(F.expr(condition), F.lit(False))
+        return self._rewrite_matching("DELETE", condition, lambda df: df.filter(~cond), "numRemovedRows")
+
+    def update(self, condition: str, assignments: dict[str, str]) -> int:
+        """UPDATE SET col=expr WHERE condition — touched-file rewrite."""
+        cond = F.coalesce(F.expr(condition), F.lit(False))
+
+        def rewrite(df: DataFrame) -> DataFrame:
+            return df.select(
+                *[
+                    F.when(cond, F.expr(assignments[c])).otherwise(F.col(c)).alias(c)
+                    if c in assignments
+                    else F.col(c)
+                    for c in df.columns
+                ]
+            )
+
+        return self._rewrite_matching("UPDATE", condition, rewrite, "numUpdatedRows")
 
     def merge(self, source: DataFrame, on: list[str]) -> "MergeBuilder":
         """MERGE INTO builder (DeltaTable.merge equivalent)."""
@@ -619,18 +634,18 @@ class TackleTable:
     def restore(self, version: int) -> int:
         """RESTORE TABLE TO VERSION AS OF — new commit, old data files
         (still on disk until VACUUM) become active again."""
-        target_files, target_schema = self._active_files(version)
-        current_files, _ = self._active_files()
-        add = [f for f in target_files if f not in set(current_files)]
-        remove = [f for f in current_files if f not in set(target_files)]
+        current = self.snapshot()
+        target = self.snapshot(version)
+        add = [f for f in target.files if f not in current.files]
+        remove = [f for f in current.files if f not in target.files]
         return self._commit(
             "RESTORE",
             {"version": version},
             add,
             remove,
             {"numRestoredFiles": len(add), "numRemovedFiles": len(remove)},
-            schema=target_schema,
-            expected_version=self.version(),
+            schema=target.schema,
+            expected_version=current.version,
         )
 
     def optimize(
@@ -657,14 +672,11 @@ class TackleTable:
         target derived from the reference's size ladder
         (deltaoptimizer.py:1295-1313) via ``plans.optimizer``.
         """
-        if where:
-            files, _skipped = self.prune_files(where)
-            schema = self._active_files()[1]
-        else:
-            files, schema = self._active_files()
+        snap = self.snapshot()
+        files = self.prune_files(where, snap.version)[0] if where else list(snap.files)
         if not files or (len(files) <= 1 and not zorder_by):
-            return self.version()
-        df = self.spark.read.schema(schema).parquet(*[os.path.join(self.path, f) for f in files])
+            return snap.version
+        df = self._read(snap, files)
         n = df.count()
         parts = max(1, (n + target_file_rows - 1) // target_file_rows)
         if zorder_by:
@@ -679,7 +691,7 @@ class TackleTable:
             new_files,
             files,
             {"numFilesBefore": len(files), "numFilesAfter": len(new_files)},
-            expected_version=self.version(),
+            expected_version=snap.version,
         )
 
     def vacuum(self, keep_versions: int = 1) -> int:
@@ -689,10 +701,7 @@ class TackleTable:
         time-travelable, like Delta VACUUM with a retention window.
         """
         latest = self.version()
-        horizon = max(0, latest - keep_versions + 1)
-        keep: set[str] = set()
-        for v in range(horizon, latest + 1):
-            keep.update(self._active_files(v)[0])
+        keep = {f for v in range(max(0, latest - keep_versions + 1), latest + 1) for f in self.snapshot(v).files}
         removed = 0
         data_root = os.path.join(self.path, _DATA_DIR)
         for dirpath, _dirs, files in os.walk(data_root):
@@ -752,49 +761,40 @@ class MergeBuilder:
 
     def execute(self) -> int:
         t = self.table
-        spark = t.spark
-        if self._txn is not None and t.txn_version(self._txn[0]) >= self._txn[1]:
-            return t.version()
-        start_v = t.version()
-        files, schema = t._active_files()
-        cols = [n for n, _ in _schema_fields(schema)]
+        snap = t.snapshot()
+        if _applied(snap, self._txn):
+            return snap.version
+        cols = [n for n, _ in _schema_fields(snap.schema)]
         src = self.source.select(*cols)
+        # Null-safe key match in both phases: a null-key target row must be
+        # discovered in phase 1 too, or whether it gets updated would
+        # depend on which file it shares with other matched keys.
+        null_safe = [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in self.on]
 
         # Phase 1 (find touched files): one pushdown scan, broadcast
         # semi-join against the distinct source keys — only these files
         # can contain matched rows, everything else is untouched.
         touched: list[str] = []
-        if files:
-            snap = t.read().withColumn("__file", F.input_file_name())
+        if snap.files:
+            target = t._read(snap).withColumn("__file", F.input_file_name())
             keys = src.select(*self.on).distinct()
-            # Null-safe key match, same as the phase-2 merge join: a
-            # null-key target row must be discovered here too, or whether
-            # it gets updated would depend on which file it shares with
-            # other matched keys.
-            null_safe = [
-                F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in self.on
-            ]
             touched = [
                 _local_path(r["__file"])
-                for r in snap.alias("t")
+                for r in target.alias("t")
                 .join(F.broadcast(keys.alias("s")), null_safe, "left_semi")
                 .select("__file")
                 .distinct()
                 .collect()
             ]
 
-        tgt = (
-            spark.read.schema(schema).parquet(*touched)
-            if touched
-            else spark.createDataFrame([], schema)
-        )
+        tgt = t._read(snap, touched)
 
         s_struct = F.struct(*[F.col(f"s.{c}").alias(c) for c in cols])
         t_struct = F.struct(*[F.col(f"t.{c}").alias(c) for c in cols])
         # presence markers make match detection correct even for null keys
         joined = tgt.withColumn("__t", F.lit(1)).alias("t").join(
             src.withColumn("__s", F.lit(1)).alias("s"),
-            [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in self.on],
+            null_safe,
             "full_outer",
         )
         matched = F.col("t.__t").isNotNull() & F.col("s.__s").isNotNull()
@@ -826,17 +826,14 @@ class MergeBuilder:
             "numTargetFilesRewritten": len(rel_touched),
             "numOutputRows": n_rows,
         }
-        merge_params: dict[str, Any] = {"on": self.on}
-        if self._txn is not None:
-            merge_params["txn"] = {"appId": self._txn[0], "version": self._txn[1]}
         try:
             version = t._commit(
                 "MERGE",
-                merge_params,
+                {"on": self.on},
                 new_files,
                 rel_touched,
                 metrics,
-                expected_version=start_v,
+                expected_version=snap.version,
                 txn=self._txn,
             )
         except CommitConflictError:
@@ -845,8 +842,8 @@ class MergeBuilder:
             # epoch — the merge is already durably applied: idempotent
             # no-op (the files written above stay orphaned/uncommitted).
             # Any other winner is a genuine conflict the caller re-runs.
-            if self._txn is not None and t.txn_version(self._txn[0]) >= self._txn[1]:
-                return t.version()
+            if _applied(latest := t.snapshot(), self._txn):
+                return latest.version
             raise
         if self._write_cdf:
             cdf = tagged.filter(F.col("__action").isin("update", "insert", "delete")).select(

@@ -19,7 +19,7 @@ def clustered_orders(spark, tmp_path):
 
 def test_stats_written_at_commit(clustered_orders):
     t, _ = clustered_orders
-    stats = t._active_stats()
+    stats = {f: st for f, (st, _sk) in t.snapshot().files.items()}
     assert stats and all(s for s in stats.values())
     some = next(iter(stats.values()))
     assert "o_custkey" in some and some["o_custkey"][0] <= some["o_custkey"][1]
@@ -62,11 +62,11 @@ def test_partition_scoped_optimize(spark, clustered_orders):
     """OPTIMIZE ... WHERE rewrites only files whose envelope can match;
     everything else keeps its layout and content is unchanged."""
     t, orders = clustered_orders
-    before = set(t._active_files()[0])
+    before = set(t.snapshot().files)
     kept, untouched = t.prune_files("o_custkey < 30")
     assert untouched, "test needs a table where the predicate prunes"
     t.optimize(target_file_rows=10_000, where="o_custkey < 30")
-    after = set(t._active_files()[0])
+    after = set(t.snapshot().files)
     # files outside the predicate survived verbatim
     assert set(untouched) <= after
     # files inside it were rewritten
@@ -84,7 +84,7 @@ def test_skipping_survives_dml(spark, clustered_orders):
     t.update("o_custkey = 8", {"o_totalprice": "o_totalprice + 1"})
     assert t.scan("o_custkey = 8").count() == n_before
     # rewritten files got fresh stats
-    stats = t._active_stats()
+    stats = {f: st for f, (st, _sk) in t.snapshot().files.items()}
     assert all("o_custkey" in s for s in stats.values())
 
 
@@ -140,7 +140,7 @@ def test_point_lookup_sketch_prunes_where_minmax_cannot(spark, tmp_path):
 
     # envelopes really do span the domain (min/max is useless here)
     kept_minmax = [
-        f for f, s in t._active_stats().items() if s.get("id") and s["id"][0] <= 1234 <= s["id"][1]
+        f for f, (s, _sk) in t.snapshot().files.items() if s.get("id") and s["id"][0] <= 1234 <= s["id"][1]
     ]
     assert len(kept_minmax) >= 7
 
@@ -194,7 +194,7 @@ def test_two_dimension_zorder_prunes_on_both_columns(spark, tmp_path):
     )
     t = TackleTable.create(spark, str(tmp_path / "flt"), df)
     t.optimize(target_file_rows=64, zorder_by=["centroid_id", "label"])
-    total = len(t._active_files()[0])
+    total = len(t.snapshot().files)
     kept_lead, _ = t.prune_files("centroid_id = 3")
     kept_both, _ = t.prune_files("centroid_id = 3 AND label = 4")
     assert len(kept_lead) < total, "leading column must prune at all"

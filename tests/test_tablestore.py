@@ -31,7 +31,10 @@ def test_create_read_roundtrip(spark, users, tmp_path):
     t = TackleTable.create(spark, str(tmp_path / "t"), users)
     assert t.version() == 0
     assert rows(t.read()) == rows(users)
-    assert t.detail()["numFiles"] >= 1
+    d = t.detail()
+    assert d["numFiles"] >= 1
+    snap = t.snapshot()
+    assert (d["numFiles"], d["version"], d["schema"]) == (len(snap.files), snap.version, snap.schema)
 
 
 def test_append_and_time_travel(spark, users, tmp_path):
@@ -289,12 +292,12 @@ def test_merge_txn_conflict_resolves_to_noop(spark, users, tmp_path):
     )
 
     raced = {"done": False}
-    orig_active_files = TackleTable._active_files
+    orig_snapshot = TackleTable.snapshot
 
-    def racing_active_files(self, *args, **kwargs):
-        # fire the zombie's winning commit after the straggler captured
-        # start_v but before its own commit lands
-        out = orig_active_files(self, *args, **kwargs)
+    def racing_snapshot(self, *args, **kwargs):
+        # fire the zombie's winning commit after the straggler took its
+        # snapshot but before its own commit lands
+        out = orig_snapshot(self, *args, **kwargs)
         if not raced["done"]:
             raced["done"] = True
             zombie = TackleTable(spark, t.path)
@@ -309,7 +312,7 @@ def test_merge_txn_conflict_resolves_to_noop(spark, users, tmp_path):
 
     import unittest.mock as mock
 
-    with mock.patch.object(TackleTable, "_active_files", racing_active_files):
+    with mock.patch.object(TackleTable, "snapshot", racing_snapshot):
         v = (
             t.merge(delta, on=["id"])
             .whenMatchedUpdateAll()
@@ -359,17 +362,54 @@ def test_overwrite_txn_conflict_resolves_to_noop(spark, users, tmp_path):
     )
 
     raced = {"done": False}
-    orig = T._collect_stats
+    orig = T._commit_entry
 
-    def racing_collect_stats(path, add):
+    def racing_commit_entry(root, entry):
         # fire the zombie's winning overwrite after the straggler's
         # per-attempt txn recheck but before its log write
         if not raced["done"]:
             raced["done"] = True
             TackleTable(spark, t.path).overwrite(new, txn=("mv", 9))
-        return orig(path, add)
+        return orig(root, entry)
 
-    with mock.patch.object(T, "_collect_stats", racing_collect_stats):
+    with mock.patch.object(T, "_commit_entry", racing_commit_entry):
         v = t.overwrite(new, txn=("mv", 9))
     assert v == t.version()
     assert t.read().count() == 1  # epoch applied exactly once
+
+
+@pytest.mark.parametrize("op", ["optimize", "overwrite"])
+def test_rewrite_conflicts_with_commit_made_during_its_write(spark, tmp_path, op):
+    """A full rewrite read its files at version v; a commit another handle
+    makes while the rewrite writes its output must make the rewrite's
+    commit conflict. Accepting it would resurrect rows a concurrent DELETE
+    removed (OPTIMIZE) or keep rows a concurrent APPEND added through a
+    full replace (OVERWRITE)."""
+    import unittest.mock as mock
+
+    import lakehouse_tacklebox_spark.tablestore.table as T
+
+    t = TackleTable.create(spark, str(tmp_path / "t"), spark.range(10).toDF("id"))
+    t.append(spark.range(10, 20).toDF("id"))
+    other = TackleTable(spark, t.path)
+    raced = {"done": False}
+    orig = T._write_files
+
+    def racing_write_files(df, root):
+        if not raced["done"]:
+            raced["done"] = True
+            if op == "optimize":
+                other.delete("id < 5")
+            else:
+                other.append(spark.range(20, 25).toDF("id"))
+        return orig(df, root)
+
+    with mock.patch.object(T, "_write_files", racing_write_files):
+        with pytest.raises(CommitConflictError):
+            if op == "optimize":
+                t.optimize()
+            else:
+                t.overwrite(spark.range(100, 103).toDF("id"))
+    want = list(range(5, 20)) if op == "optimize" else list(range(25))
+    assert sorted(r["id"] for r in t.read().collect()) == want
+    assert t.version() == 2

@@ -27,6 +27,10 @@ def test_shallow_clone_zero_copy(spark, tmp_path, nation_table):
     assert not os.listdir(os.path.join(c.path, "data"))
     hist = c.history()
     assert hist[-1]["operation"] == "CLONE" and not hist[-1]["operationParameters"]["deep"]
+    src = nation_table.snapshot()
+    assert hist[-1]["operationParameters"]["sourceVersion"] == src.version
+    assert hist[-1]["operationMetrics"]["numReferencedFiles"] == len(src.files)
+    assert c.detail()["numFiles"] == len(src.files) == len(c.snapshot().files)
     # clone evolves independently of the source
     c.delete("n_nationkey >= 10")
     assert c.read().count() == 10
@@ -107,7 +111,7 @@ def test_identity_watermark_persisted_in_log(spark, tmp_path):
     t = TackleTable.create(spark, str(tmp_path / "wm"), schema="id bigint, name string")
     mgd = ColumnManagedTable(t, identity_col="id")
     mgd.append(_named_batch(spark, ["a", "b", "c"]))
-    assert "id" in t._entries()[-1].identity_watermark
+    assert "id" in t.snapshot().watermarks
     wm1 = t.identity_watermark("id")
     assert wm1 == max(r.id for r in t.read().collect()) + 1
     mgd.append(_named_batch(spark, ["d"]))
@@ -122,7 +126,7 @@ def test_identity_legacy_table_bootstraps_from_footer_stats(spark, tmp_path):
     metadata already in the log, not a data scan."""
     seeded = spark.createDataFrame([(7, "x"), (41, "y")], "id bigint, name string")
     t = TackleTable.create(spark, str(tmp_path / "legacy"), seeded)
-    assert not t._entries()[-1].identity_watermark
+    assert not t.snapshot().watermarks
     assert t.identity_watermark("id") == 42
     mgd = ColumnManagedTable(t, identity_col="id")
     mgd.append(_named_batch(spark, ["z"]))
